@@ -1308,6 +1308,12 @@ def _bucket_agg(spark: SparkSession, matched: DataFrame, spec: dict) -> DataFram
         )
         after = body.get("after")
         if after is not None:
+            missing = [n for n in names if n not in after]
+            if missing:
+                raise ValueError(
+                    f"composite 'after' cursor lacks sources {missing}; "
+                    f"it needs a value for each of {names}"
+                )
             grouped = grouped.where(
                 _after_predicate([(n, True) for n in names],
                                  [after[n] for n in names])

@@ -2,12 +2,29 @@
 
 ``bm25_topk_wand`` (query/wand.py) is the one-shot path — every call pays
 stats lookup + a cold scan. A real search deployment keeps the index hot:
-this engine loads ``corpus_stats`` once, keeps a driver-side LRU of
+this engine loads ``corpus_stats`` once, keeps a driver-side cache of
 dictionary rows for seen terms, and (optionally) persists the
-``posting_blocks`` DataFrame so repeat queries scan executor memory
-instead of parquet. That mirrors how the reference's delegate (OpenSearch/
-Lucene) serves queries from page-cached segment files, and is the
-configuration the p50/p95 latency numbers in BENCH are measured on.
+``posting_blocks`` DataFrame so a scan reads executor memory instead of
+parquet. That mirrors how the reference's delegate (OpenSearch/Lucene)
+serves queries from page-cached segment files.
+
+Two scoring paths share one per-shard dispatch (``wand.score_shards``)
+and give the same answers:
+
+- driver-local, for the serving calls ``topk_rows`` and ``topk_batch``: a
+  request whose distinct terms hold at most ``LOCAL_POSTINGS_BUDGET``
+  postings (Σdf, read from the dictionary, no job) is scored in the driver
+  from a per-term block cache pinned to the engine's generation. The
+  request's cold terms cost one filtered ``toPandas()``; a warm request
+  runs no Spark job and no Python worker. On a 4-vCPU host a warm query
+  takes ~30 ms this way against ~1 s for the distributed job, nearly all
+  of which is job scheduling and the Arrow hop into the Python worker
+  rather than BM25.
+- distributed: ``filter -> mapInPandas`` over the persisted blocks, one
+  Spark job. ``topk`` always returns this lazy plan, and the serving
+  calls use it over the budget (at design scale a hot term's postings do
+  not fit the driver) or when the engine has too many tombstones to hold
+  their ids.
 
 At design scale the blocks table exceeds cluster RAM; ``persist_blocks``
 uses MEMORY_AND_DISK so hot terms stay resident and cold ones spill —
@@ -16,14 +33,29 @@ the same economics as Lucene's page cache.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections import OrderedDict
+
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..analyzer import tokenize_py
 from ..tableio import TableIO
 from .common import idf as _idf
-from .wand import _wand_shard
+from .wand import score_shards
+
+# Postings a request may hold (Σdf over its distinct terms) to be scored
+# in the driver; also the cap on the postings the block cache keeps.
+# Sized on a 4-vCPU host (local[4]) over a 50k-doc write_code_files index
+# (16 shards), timing requests of 1-32 hot terms (50k-1.5M postings) three
+# ways: warm driver-local, cold driver-local (empty block cache) and the
+# distributed plan collected. Warm local cost ~1.3 us a posting (100 ms at
+# 50k, ~600 ms at 400k, 0.75-1.4 s at 750k), cold 1.2-2x that; the
+# distributed job took 1.1-1.8 s at every size. They cross near 750k
+# postings; 500k keeps a warm local request under ~0.6 s and a cold one
+# under ~1 s. Cached blocks take ~10.5 B a posting in pandas (~5 MB).
+LOCAL_POSTINGS_BUDGET = 500_000
 
 
 class IndexQueryEngine:
@@ -34,24 +66,10 @@ class IndexQueryEngine:
         persist_blocks: bool = True,
         shard_partitions: int = 8,
         exhaustive_threshold: int | None = None,
-        result_cache_size: int = 0,
     ):
         self.spark = spark
         self.io = TableIO(index_dir)
         self.shard_partitions = shard_partitions
-        # Opt-in result cache keyed by (query, k): a search tier's hottest
-        # queries repeat, and the engine instance is pinned to one index
-        # snapshot (generation resolved at construction), so cached rows
-        # can never go stale within the instance. A hit skips the whole
-        # distributed kernel; the trade is that a MISS materializes
-        # inside topk (the caller's own .collect() then reads a
-        # LocalTableScan, ~ms). Off by default to preserve the fully-lazy
-        # one-job contract (NOTES.md documents why eager driver-side
-        # shortcuts are usually a loss here — this one only pays on hits).
-        from collections import OrderedDict
-
-        self._result_cache_size = result_cache_size
-        self._result_cache: OrderedDict[tuple[str, int], list] = OrderedDict()
         from .common import load_stats_full
         from .wand import EXHAUSTIVE_THRESHOLD
 
@@ -64,6 +82,11 @@ class IndexQueryEngine:
             EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
         )
         self._dict_cache: dict[str, dict | None] = {}
+        # term_hash -> that term's block rows (every shard and segment) for
+        # the driver-local path, least recently used first; pinned to the
+        # generation like the dictionary cache, so it never goes stale
+        self._block_cache: OrderedDict[int, pd.DataFrame] = OrderedDict()
+        self._cached_postings = 0
         # pin BOTH versioned tables to the generation current at
         # construction (rpath resolves the pointer once): with the GC
         # grace period (_gc_generations retain>=1) a refresh that bumps
@@ -80,23 +103,18 @@ class IndexQueryEngine:
         # live-docs snapshot, pinned at construction like the generation
         # pointer: deletes issued later need a new engine (same rule as
         # refresh). Serving kernels widen per-shard top-k by the tombstone
-        # count so post-filter top-k stays exact; the count shrinks back
-        # to zero when refresh purges — Lucene's delete-then-merge cost
-        # curve. Zero overhead when no delete ever happened.
+        # count so post-filter top-k stays exact. The tombstones table is
+        # never cleared, so the count only grows, also across refresh.
+        # Zero overhead when no delete ever happened.
         from .common import tombstone_count
 
         self._n_tombstones = tombstone_count(spark, self.io)
-        self._dead_ids: list[int] = (
-            [
-                int(r["doc_id"])
-                for r in spark.read.parquet(self.io.path("tombstones"))
-                .select("doc_id")
-                .distinct()
-                .collect()
-            ]
+        dead = (
+            spark.read.parquet(self.io.path("tombstones")).select("doc_id").distinct().collect()
             if 0 < self._n_tombstones <= 1000
             else []
         )
+        self._dead_ids = frozenset(int(r["doc_id"]) for r in dead)
         _seg = self.io.rpath("posting_blocks/_segdict")
         self._segdict_path = _seg if _os.path.isdir(_seg) else None
         self.blocks = self.io.read(spark, "posting_blocks")
@@ -164,37 +182,76 @@ class IndexQueryEngine:
         return {t: s for t in terms if (s := self._dict_cache.get(t)) is not None}
 
     _TOPK_SCHEMA = "rank int, doc_id long, score double"
+    _BATCH_SCHEMA = "query_id string, rank int, doc_id long, score double"
+
+    def _hstats(self, query_text: str) -> dict[int, dict]:
+        """{term_hash: stats} of the query's terms found in the dictionary."""
+        terms = sorted(set(tokenize_py(query_text)))
+        return {s["hash"]: s for s in self._term_stats(terms).values()}
+
+    def _fits_driver(self, per_q: dict[str, dict[int, dict]]) -> bool:
+        """Path choice from what the driver knows: score locally when the
+        request's distinct terms hold at most LOCAL_POSTINGS_BUDGET
+        postings and the dead ids are in memory (they are not loaded past
+        1000 tombstones)."""
+        dfs = {h: s["df"] for hstats in per_q.values() for h, s in hstats.items()}
+        if not dfs:
+            return True  # nothing to score
+        if self._n_tombstones and not self._dead_ids:
+            return False
+        return sum(dfs.values()) <= LOCAL_POSTINGS_BUDGET
+
+    def _cached_blocks(self, hashes: set[int]) -> pd.DataFrame:
+        """Block rows of ``hashes``: the cold ones fetched with one filtered
+        ``toPandas()``, then LRU-evicted down to the budget."""
+        cache = self._block_cache
+        cold = [h for h in hashes if h not in cache]
+        if cold:
+            pdf = self.blocks.where(F.col("term_hash").isin(cold)).toPandas()
+            groups = dict(tuple(pdf.groupby("term_hash")))
+            for h in cold:
+                cache[h] = groups.get(h, pdf.iloc[:0])
+            self._cached_postings += int(pdf["n_docs"].sum())
+        for h in hashes:
+            cache.move_to_end(h)
+        out = pd.concat([cache[h] for h in hashes])
+        while self._cached_postings > LOCAL_POSTINGS_BUDGET:
+            _, old = cache.popitem(last=False)
+            self._cached_postings -= int(old["n_docs"].sum())
+        return out
+
+    def _score_local(
+        self, per_q: dict[str, dict[int, dict]], k: int
+    ) -> dict[str, list[tuple[int, float]]]:
+        """The distributed plan run in the driver: the same per-shard
+        dispatch and widening, dead ids dropped, then each query's global
+        top-k in (score desc, doc_id asc) order."""
+        hits: dict[str, list[tuple[int, float]]] = {qid: [] for qid in per_q}
+        hashes = {h for hstats in per_q.values() for h in hstats}
+        if hashes:
+            blocks = self._cached_blocks(hashes)
+            n = k + self._n_tombstones
+            for qid, doc, score in score_shards(
+                [blocks], per_q, self.avgdl, n, self._thr, self._bounds
+            ):
+                if doc not in self._dead_ids:
+                    hits[qid].append((doc, score))
+        return {qid: sorted(h, key=lambda t: (-t[1], t[0]))[:k] for qid, h in hits.items()}
 
     def topk(self, query_text: str, k: int = 10) -> DataFrame:
         """(rank int, doc_id long, score double) — block-max WAND per shard,
-        TakeOrderedAndProject merge. One Spark job on the warm path."""
-        if self._result_cache_size:
-            return self.spark.createDataFrame(
-                self.topk_rows(query_text, k), self._TOPK_SCHEMA
-            )
+        TakeOrderedAndProject merge. Lazy: one Spark job when collected."""
         return self._topk_df(query_text, k)
 
-    def topk_rows(self, query_text: str, k: int = 10) -> list:
-        """Collected result rows, result cache consulted first — the
-        SERVING-path API. Measured floor on this class of host: even a
-        10-row LocalTableScan costs ~0.5 s per ``collect()`` (fixed
-        driver/job overhead), so a cache that returns a DataFrame can
-        never beat that floor; returning the cached rows directly makes a
-        hit cost zero Spark jobs (~microseconds). Requires
-        ``result_cache_size`` > 0; uncached engines compute and collect.
-        """
-        if not self._result_cache_size:
-            return self._topk_df(query_text, k).collect()
-        key = (query_text, k)
-        hit = self._result_cache.get(key)
-        if hit is not None:
-            self._result_cache.move_to_end(key)
-            return hit
-        rows = self._topk_df(query_text, k).collect()
-        self._result_cache[key] = rows
-        if len(self._result_cache) > self._result_cache_size:
-            self._result_cache.popitem(last=False)
-        return rows
+    def topk_rows(self, query_text: str, k: int = 10) -> list[Row]:
+        """Collected result rows — the SERVING-path API, equal to
+        ``topk(query_text, k).collect()``. A request inside the budget is
+        scored in the driver: no Spark job once its terms' blocks are
+        cached, one small ``toPandas()`` for its cold terms. Rows, not a
+        DataFrame, because collecting even a local DataFrame is a job.
+        Over the budget it collects the distributed plan."""
+        out = self._topk_df(query_text, k, local=True)
+        return out if isinstance(out, list) else out.collect()
 
     def _drop_dead(self, df: DataFrame) -> DataFrame:
         """Live-docs filter over a (small) candidate frame: literal
@@ -202,7 +259,7 @@ class IndexQueryEngine:
         if not self._n_tombstones:
             return df
         if self._dead_ids:
-            return df.where(~F.col("doc_id").isin(self._dead_ids))
+            return df.where(~F.col("doc_id").isin(list(self._dead_ids)))
         t = (
             self.spark.read.parquet(self.io.path("tombstones"))
             .select("doc_id")
@@ -210,41 +267,42 @@ class IndexQueryEngine:
         )
         return df.join(F.broadcast(t), "doc_id", "left_anti")
 
-    def _topk_df(self, query_text: str, k: int) -> DataFrame:
-        terms = sorted(set(tokenize_py(query_text)))
-        tstats = self._term_stats(terms)
-        empty = "rank int, doc_id long, score double"
-        if not tstats:
-            return self.spark.createDataFrame([], empty)
-        hstats = {s["hash"]: s for s in tstats.values()}
+    def _candidates(self, per_q: dict[str, dict[int, dict]], k: int) -> DataFrame:
+        """The distributed scoring plan: (query_id, doc_id, score) per-shard
+        candidates from one ``mapInPandas`` pass, live docs only."""
         avgdl, n = self.avgdl, k + self._n_tombstones
         thr, bounds = self._thr, self._bounds
 
-        import pandas as pd
-
         def per_shard(pdfs):
-            buf: dict[int, list[pd.DataFrame]] = {}
-            for pdf in pdfs:
-                for s, grp in pdf.groupby("shard"):
-                    buf.setdefault(int(s), []).append(grp)
-            rows = []
-            for s, parts in buf.items():
-                rows.extend(_wand_shard(pd.concat(parts), hstats, avgdl, n, thr, bounds))
-            yield (
-                pd.DataFrame(rows, columns=["doc_id", "score"])
-                if rows
-                else pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-                )
+            rows = score_shards(pdfs, per_q, avgdl, n, thr, bounds)
+            yield pd.DataFrame(rows, columns=["query_id", "doc_id", "score"]).astype(
+                {"doc_id": "int64", "score": "float64"}
             )
 
-        filtered = self.blocks.where(F.col("term_hash").isin(list(hstats)))
+        hashes = list({h for hstats in per_q.values() for h in hstats})
+        filtered = self.blocks.where(F.col("term_hash").isin(hashes))
         if not self._prepartitioned:
             filtered = filtered.repartition(self.shard_partitions, "shard")
-        local = self._drop_dead(
-            filtered.mapInPandas(per_shard, "doc_id long, score double")
+        return self._drop_dead(
+            filtered.mapInPandas(per_shard, "query_id string, doc_id long, score double")
         )
-        topk = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _topk_df(self, query_text: str, k: int, local: bool = False) -> DataFrame | list[Row]:
+        """Plan one query: tokenize, dictionary lookup, path choice. With
+        ``local`` a request inside the budget is scored in the driver and
+        its rows are returned; otherwise the lazy distributed plan."""
+        per_q = {"": self._hstats(query_text)}
+        if local and self._fits_driver(per_q):
+            top = self._score_local(per_q, k)[""]
+            return [Row(rank=r, doc_id=d, score=s) for r, (d, s) in enumerate(top, 1)]
+        if not per_q[""]:
+            return self.spark.createDataFrame([], self._TOPK_SCHEMA)
+        topk = (
+            self._candidates(per_q, k)
+            .drop("query_id")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+        )
         from pyspark.sql.window import Window
 
         # rank over the already-top-k rows: partitionBy(lit(0)) declares the
@@ -256,82 +314,43 @@ class IndexQueryEngine:
         return topk.select(w.alias("rank"), "doc_id", "score")
 
     def topk_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        """Evaluate MANY queries in ONE Spark job: (query_id string,
-        rank int, doc_id long, score double).
+        """Evaluate MANY queries as one request: (query_id string, rank int,
+        doc_id long, score double), rank-identical to per-query ``topk``.
 
-        The blocks scan filters on the union of all query-term hashes and
-        each shard partition runs WAND once per query over its (already
-        grouped) blocks — per-query latency amortizes the job's fixed
-        scheduling cost, the way a search tier batches its request queue.
-        Results are rank-identical to per-query ``topk``.
+        Inside the budget the batch is scored in the driver and the rows
+        come back as a DataFrame built from pandas (the Arrow path; from a
+        list of tuples it would be a parallelized RDD, ~20x slower to
+        collect). Over it, ONE Spark job: the blocks scan filters on the
+        union of all query-term hashes and each shard partition scores
+        every query over its (already grouped) blocks — per-query latency
+        amortizes the job's fixed scheduling cost, the way a search tier
+        batches its request queue.
         """
-        per_q: dict[str, dict[int, dict]] = {}
-        all_hashes: set[int] = set()
-        for qid, text in queries.items():
-            terms = sorted(set(tokenize_py(text)))
-            tstats = self._term_stats(terms)
-            hstats = {s["hash"]: s for s in tstats.values()}
-            per_q[qid] = hstats
-            all_hashes.update(hstats)
-        empty = "query_id string, rank int, doc_id long, score double"
-        if not all_hashes:
-            return self.spark.createDataFrame([], empty)
-        avgdl, n = self.avgdl, k + self._n_tombstones
-        from .wand import batch_exhaustive_shard
-
-        thr, bounds = self._thr, self._bounds
-
-        import pandas as pd
-
-        def per_shard(pdfs):
-            buf: dict[int, list[pd.DataFrame]] = {}
-            for pdf in pdfs:
-                for s, grp in pdf.groupby("shard"):
-                    buf.setdefault(int(s), []).append(grp)
-            rows = []
-            for s, parts in buf.items():
-                shard_df = pd.concat(parts)
-                if int(shard_df["n_docs"].sum()) <= thr:
-                    # decode-once batch kernel: each term's blocks decoded
-                    # a single time for ALL queries in the batch
-                    rows.extend(batch_exhaustive_shard(shard_df, per_q, avgdl, n))
-                    continue
-                for qid, hstats in per_q.items():
-                    if not hstats:
-                        continue
-                    sub = shard_df[shard_df["term_hash"].isin(list(hstats))]
-                    if len(sub) == 0:
-                        continue
-                    for doc_id, score in _wand_shard(sub, hstats, avgdl, n, thr, bounds):
-                        rows.append((qid, doc_id, score))
-            yield (
-                pd.DataFrame(rows, columns=["query_id", "doc_id", "score"])
-                if rows
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="object"),
-                        "doc_id": pd.Series(dtype="int64"),
-                        "score": pd.Series(dtype="float64"),
-                    }
-                )
+        per_q = {qid: self._hstats(text) for qid, text in queries.items()}
+        if self._fits_driver(per_q):
+            rows = [
+                (qid, r, d, s)
+                for qid, top in self._score_local(per_q, k).items()
+                for r, (d, s) in enumerate(top, 1)
+            ]
+            pdf = pd.DataFrame(rows, columns=["query_id", "rank", "doc_id", "score"])
+            return self.spark.createDataFrame(
+                pdf.astype({"rank": "int32", "doc_id": "int64", "score": "float64"}),
+                self._BATCH_SCHEMA,
             )
-
-        filtered = self.blocks.where(F.col("term_hash").isin(list(all_hashes)))
-        if not self._prepartitioned:
-            filtered = filtered.repartition(self.shard_partitions, "shard")
-        local = self._drop_dead(
-            filtered.mapInPandas(per_shard, "query_id string, doc_id long, score double")
-        )
         from pyspark.sql.window import Window
 
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
-            local.withColumn("rank", F.row_number().over(w))
+            self._candidates(per_q, k)
+            .withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score")
         )
 
     def close(self) -> None:
+        self._block_cache.clear()
+        self._cached_postings = 0
         try:
             self.blocks.unpersist()
         except Exception:

@@ -11,7 +11,9 @@ The scan is pruned by ``term IN (...)`` pushed to parquet (blocks are
 written sorted by term within each shard partition), so a query touches
 only its terms' row groups in each shard.
 
-Shard-local kernel lineup (dispatched by _wand_shard):
+Shard-local kernel lineup (``score_shards`` is the one per-shard dispatch
+of every serving path; it picks the batch exhaustive kernel or
+``_wand_shard``):
 - exhaustive: decode-everything vectorized BM25 — fastest below
   EXHAUSTIVE_THRESHOLD postings where pruning can't beat flat numpy;
 - blockmax (default above the threshold): vectorized block-granular
@@ -31,7 +33,7 @@ Correctness guardrails (rank-identity vs the DataFrame path + oracle):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -160,50 +162,17 @@ class _Cursor:
 def _exhaustive_shard(
     groups: pd.DataFrame, hstats: dict[int, dict], avgdl: float, k: int
 ) -> list[tuple[int, float]]:
-    """Vectorized exhaustive BM25 over this shard's query-term blocks.
+    """Vectorized exhaustive BM25 over this shard's query-term blocks:
+    ``batch_exhaustive_shard`` over a batch of one query.
 
     Decode every block (numpy varint), score all postings in one
-    vectorized expression, segment-sum per doc_id with add.reduceat, and
-    top-k with argpartition. No per-posting Python — for the low-df regime
-    where WAND's theta cannot prune much, this beats the pointer kernel by
-    an order of magnitude because the work is O(postings) either way and
-    here it runs at numpy speed. Produces the same (score, doc) answer as
-    the pointer kernel (asserted in tests)."""
-    doc_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    for th, bdf in groups.groupby("term_hash"):
-        st = hstats.get(int(th))
-        if st is None:
-            continue
-        idf = st["idf"]
-        for first, gaps, tfs_b, dls_b, n in zip(
-            bdf["first_doc_id"], bdf["doc_gaps"], bdf["tfs"], bdf["dls"], bdf["n_docs"]
-        ):
-            n = int(n)
-            docs = decode_doc_ids_payload(int(first), gaps, n)
-            tf = decode_payload(tfs_b, n).astype(np.float64)
-            dl = decode_payload(dls_b, n).astype(np.float64)
-            doc_parts.append(docs)
-            # association matches batch_exhaustive_shard: idf * (wtf)
-            score_parts.append(idf * ((tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl))))
-    if not doc_parts:
-        return []
-    docs = np.concatenate(doc_parts)
-    scores = np.concatenate(score_parts)
-    order = np.argsort(docs, kind="stable")
-    d, s = docs[order], scores[order]
-    starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
-    sums = np.add.reduceat(s, starts)
-    uniq = d[starts]
-    if len(sums) > k:
-        # top-k by score via argpartition, then re-include every doc tying
-        # the boundary score so the doc-asc tiebreak is exact
-        boundary = sums[np.argpartition(-sums, k - 1)[:k]].min()
-        cand = np.flatnonzero(sums >= boundary)
-        sel = cand[np.lexsort((uniq[cand], -sums[cand]))]
-    else:
-        sel = np.lexsort((uniq, -sums))
-    return [(int(uniq[i]), float(sums[i])) for i in sel[:k]]
+    vectorized expression, segment-sum per doc_id and take the exact
+    top-k. No per-posting Python — for the low-df regime where WAND's
+    theta cannot prune much, this beats the pointer kernel by an order of
+    magnitude because the work is O(postings) either way and here it runs
+    at numpy speed. Produces the same (score, doc) answer as the pointer
+    kernel (asserted in tests)."""
+    return [(d, s) for _, d, s in batch_exhaustive_shard(groups, {"": hstats}, avgdl, k)]
 
 
 # below this many postings (block metadata, no decode needed) per shard the
@@ -266,7 +235,9 @@ def batch_exhaustive_shard(
     out: list[tuple[str, int, float]] = []
     for qid, hstats in per_q.items():
         doc_parts, score_parts = [], []
-        for th, st in hstats.items():
+        # terms in term_hash order, as every kernel's groupby visits them:
+        # a doc's per-term scores then sum in one order on every path
+        for th, st in sorted(hstats.items()):
             hit = decoded.get(int(th))
             if hit is not None:
                 doc_parts.append(hit[0])
@@ -493,6 +464,41 @@ def _wand_shard(
     return _wand_shard_pointer(groups, hstats, avgdl, k, bounds)
 
 
+def score_shards(
+    frames: Iterable[pd.DataFrame],
+    per_q: dict[str, dict[int, dict]],
+    avgdl: float,
+    k: int,
+    thr: int,
+    bounds: str,
+) -> list[tuple[str, int, float]]:
+    """The per-shard dispatch every serving path shares, in a Python
+    worker or in the driver: (query_id, doc_id, score), the top ``k`` of
+    each (query, shard).
+
+    ``frames`` hold block rows of complete shards; one shard may span
+    several frames (the Arrow batches of one partition). ``per_q`` maps a
+    query id to its {term_hash: stats}; a single query is a batch of one.
+    A shard whose request postings fit ``thr`` takes the decode-once
+    batch kernel for every query; a larger one runs ``_wand_shard`` per
+    query over that query's terms."""
+    buf: dict[int, list[pd.DataFrame]] = {}
+    for pdf in frames:
+        for s, grp in pdf.groupby("shard"):
+            buf.setdefault(int(s), []).append(grp)
+    out: list[tuple[str, int, float]] = []
+    for parts in buf.values():
+        shard_df = pd.concat(parts)
+        if int(shard_df["n_docs"].sum()) <= thr:
+            out.extend(batch_exhaustive_shard(shard_df, per_q, avgdl, k))
+            continue
+        for qid, hstats in per_q.items():
+            sub = shard_df[shard_df["term_hash"].isin(list(hstats))]
+            if len(sub):
+                out.extend((qid, d, sc) for d, sc in _wand_shard(sub, hstats, avgdl, k, thr, bounds))
+    return out
+
+
 def _wand_shard_pointer(
     groups: pd.DataFrame,
     hstats: dict[int, dict],
@@ -617,24 +623,18 @@ def bm25_topk_wand(
     thr = EXHAUSTIVE_THRESHOLD if exhaustive_threshold is None else exhaustive_threshold
     # live-docs: widen the per-shard kernel top-k by the tombstone count
     # so the post-filter global top-k stays exact (Lucene's pre-merge
-    # deleted-docs cost curve; refresh purges it back to zero)
+    # deleted-docs cost). The tombstones table is never cleared, so the
+    # widening stays after refresh_index purges the postings.
     from .common import live_filter, tombstone_count
 
     kk = k + tombstone_count(spark, io)
+    per_q = {"": hstats}
 
     def per_shard(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # mapInPandas over shard-partitioned scan: each incoming batch holds
-        # one shard's term-blocks (we repartition by shard below)
-        buf: dict[int, list[pd.DataFrame]] = {}
-        for pdf in pdfs:
-            for s, grp in pdf.groupby("shard"):
-                buf.setdefault(int(s), []).append(grp)
-        rows = []
-        for s, parts in buf.items():
-            hits = _wand_shard(pd.concat(parts), hstats, avgdl, kk, thr, bounds)
-            rows.extend(hits)
-        yield pd.DataFrame(rows, columns=["doc_id", "score"]) if rows else pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
+        # mapInPandas over shard-partitioned scan (repartitioned below)
+        rows = [(d, s) for _, d, s in score_shards(pdfs, per_q, avgdl, kk, thr, bounds)]
+        yield pd.DataFrame(rows, columns=["doc_id", "score"]).astype(
+            {"doc_id": "int64", "score": "float64"}
         )
 
     local = live_filter(

@@ -51,6 +51,7 @@ def test_soft_delete_all_query_paths(spark, del_index, corpus_dir):
     exp9 = [(d, round(s, 9)) for d, s in exp]
     eng = IndexQueryEngine(spark, idx)
     assert [(r.doc_id, round(r.score, 9)) for r in eng.topk(Q, 5).collect()] == exp9[:5]
+    assert [(r.doc_id, round(r.score, 9)) for r in eng.topk_rows(Q, 5)] == exp9[:5]
     batch = eng.topk_batch({"a": Q}, 5).collect()
     assert [
         (r.doc_id, round(r.score, 9)) for r in sorted(batch, key=lambda r: r.rank)

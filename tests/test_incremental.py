@@ -180,6 +180,9 @@ def test_layered_pointer_kernel_rank_identity(spark, corpus_dir, tmp_path):
     assert [t[:3] for t in got_b] == [t[:3] for t in want_b]
     for g, w in zip(got_b, want_b):
         assert abs(g[3] - w[3]) < 1e-9
+    # driver-local serving path over the layered segment, tf-only bounds
+    for q in qs.values():
+        close(el.topk_rows(q, 10), ec.topk(q, 10).collect(), f"rows {q}")
 
 
 def test_layered_add_then_compact(spark, corpus_dir, tmp_path):

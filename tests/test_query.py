@@ -128,44 +128,65 @@ def test_bm25_topk_filtered_indexed(spark, index_dir, corpus_dir, corpus_docs):
     assert [(r["doc_id"], round(r["score"], 6)) for r in got] == want
 
 
-def test_engine_result_cache(spark, index_dir):
-    """Opt-in (query, k) result cache: hits return identical rows without
-    re-running the kernel, distinct k are distinct entries, and the LRU
-    stays bounded. The engine is snapshot-pinned, so entries cannot go
-    stale within an instance."""
-    from data_prepper_spark.query.engine import IndexQueryEngine
-
-    eng = IndexQueryEngine(spark, index_dir, persist_blocks=False, result_cache_size=2)
-    cold = eng.topk("def return value", 10).collect()
-    assert eng.topk("def return value", 10).collect() == cold  # hit
-    assert len(eng._result_cache) == 1
-    k5 = eng.topk("def return value", 5).collect()  # distinct k = distinct entry
-    assert [tuple(r) for r in k5] == [tuple(r) for r in cold[:5]]
-    assert len(eng._result_cache) == 2
-    eng.topk("class import", 10).collect()  # evicts the LRU entry
-    assert len(eng._result_cache) == 2
-    # uncached engine agrees (cache changes latency, never results)
-    plain = IndexQueryEngine(spark, index_dir, persist_blocks=False)
-    assert plain.topk("def return value", 10).collect() == cold
-    # empty-result queries cache cleanly too
-    assert eng.topk("qqqqxyzw", 3).collect() == []
-    assert eng.topk("qqqqxyzw", 3).collect() == []
+# serving inputs: all-absent, punctuation-only, k above the match count,
+# k=1, and one query at two k (distinct k are distinct answers)
+SERVING = [
+    ("def return value", 10),
+    ("def return value", 5),
+    ("the int return i", 1),
+    ("parse json response", 1000),
+    ("qqqqxyzw", 3),
+    ("!!! ... ;;", 10),
+]
 
 
-def test_engine_topk_rows_serving_path(spark, index_dir):
-    """topk_rows: a cache hit returns rows with no Spark job; results
-    identical to the DataFrame path."""
-    import time
+@pytest.mark.parametrize("path", ["local", "distributed"])
+def test_engine_serving_paths_equal_topk(spark, index_dir, monkeypatch, path):
+    """topk_rows and topk_batch return exactly topk(...).collect() on the
+    driver-local path and on the distributed one (forced by a zero
+    postings budget): same scores, same (score desc, doc_id asc) order."""
+    from data_prepper_spark.query import engine as engine_mod
 
-    from data_prepper_spark.query.engine import IndexQueryEngine
+    if path == "distributed":
+        monkeypatch.setattr(engine_mod, "LOCAL_POSTINGS_BUDGET", 0)
+    eng = engine_mod.IndexQueryEngine(spark, index_dir, persist_blocks=False)
+    for q, k in SERVING:
+        want = eng.topk(q, k).collect()
+        assert eng.topk_rows(q, k) == want, (q, k)
+        batch = eng.topk_batch({"a": q, "b": "class import"}, k).collect()
+        got = sorted((r.rank, r.doc_id, r.score) for r in batch if r.query_id == "a")
+        assert got == [tuple(r) for r in want], (q, k)
+    assert 0 < len(eng.topk_rows("parse json response", 1000)) < 1000  # k above the matches
+    assert eng.topk_rows("qqqqxyzw", 3) == [] and eng.topk_rows("!!! ... ;;", 10) == []
+    assert eng.topk_batch({"a": "qqqqxyzw", "b": "!!!"}, 3).collect() == []
+    assert bool(eng._block_cache) == (path == "local")
 
-    eng = IndexQueryEngine(spark, index_dir, persist_blocks=False, result_cache_size=8)
-    want = eng.topk("def return value", 10).collect()
-    t0 = time.time()
-    rows = eng.topk_rows("def return value", 10)
-    dt = time.time() - t0
-    assert rows == want
-    assert dt < 0.05, dt  # hit must be job-free (sub-50ms even on a noisy host)
-    # uncached engine: topk_rows still computes correctly
-    plain = IndexQueryEngine(spark, index_dir, persist_blocks=False)
-    assert plain.topk_rows("def return value", 10) == want
+
+def test_engine_topk_rows_serving_path(spark, index_dir, monkeypatch):
+    """A warm topk_rows runs no Spark job and returns the DataFrame
+    path's rows; the block cache stays within the postings budget (LRU)."""
+    from data_prepper_spark.query import engine as engine_mod
+
+    eng = engine_mod.IndexQueryEngine(spark, index_dir, persist_blocks=False)
+    q = "def return value"
+    want = eng.topk(q, 10).collect()
+    assert eng.topk_rows(q, 10) == want  # cold: one fetch of its blocks
+    sc = spark.sparkContext
+    sc.setJobGroup("warm-topk-rows", "warm topk_rows")
+    try:
+        assert eng.topk_rows(q, 10) == want
+        assert eng.topk_rows(q, 5) == want[:5]
+        jobs = sc.statusTracker().getJobIdsForGroup("warm-topk-rows")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    # a budget that holds one query's terms: the next query evicts them
+    budget = sum(s["df"] for s in eng._hstats(q).values())
+    monkeypatch.setattr(engine_mod, "LOCAL_POSTINGS_BUDGET", budget)
+    other = "class import"
+    assert sum(s["df"] for s in eng._hstats(other).values()) <= budget
+    assert eng.topk_rows(other, 10) == eng.topk(other, 10).collect()
+    assert eng._cached_postings <= budget
+    both = set(eng._hstats(q)) | set(eng._hstats(other))
+    assert set(eng._hstats(other)) <= set(eng._block_cache) < both
+    assert eng.topk_rows(q, 10) == want  # refetched after eviction

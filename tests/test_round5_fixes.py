@@ -297,3 +297,47 @@ def test_otlp_decode_roundtrip_and_corruption(spark):
     )
     filled = {r.spanId: r.traceGroup for r in fill_trace_group(spans_df).collect()}
     assert filled["02" * 8] == "root"
+
+
+# ------------------------------------------ uap path, existing target col --
+def test_user_agent_uap_replaces_existing_target(spark, tmp_path):
+    """The uap-core path replaces an existing ``target`` column in place,
+    like the curated path's withColumn, instead of appending a second
+    field of the same name."""
+    from data_prepper_spark.operators.enrich import user_agent
+
+    p = tmp_path / "regexes.yaml"
+    p.write_text(
+        "user_agent_parsers:\n"
+        "  - regex: '(Firefox)/(\\d+)\\.(\\d+)'\n"
+        "os_parsers: []\n"
+        "device_parsers: []\n"
+    )
+    df = spark.createDataFrame(
+        [(0, "old", "Mozilla/5.0 (X11) Gecko/20100101 Firefox/121.0", 7)],
+        "id long, user_agent string, ua string, n int",
+    )
+    curated = user_agent(df, "ua")
+    out = user_agent(df, "ua", regexes_yaml=str(p))
+    assert out.columns == curated.columns == ["id", "user_agent", "ua", "n"]
+    row = out.collect()[0]
+    assert (row.user_agent.name, row.user_agent.version) == ("Firefox", "121.0")
+    assert (row.id, row.n) == (0, 7)
+
+
+# ------------------------------------------- composite cursor validation --
+def test_composite_after_cursor_missing_source_raises(spark):
+    """A composite ``after`` cursor without a value for every declared
+    source is a descriptive ValueError naming the missing ones, not a
+    bare KeyError."""
+    from data_prepper_spark.query.dsl import bucket_agg_adhoc
+
+    df = spark.createDataFrame([("py", 10), ("go", 30)], "lang string, doc_len long")
+    spec = {"composite": {"sources": [
+        {"lang": {"terms": {"field": "lang"}}},
+        {"len": {"histogram": {"field": "doc_len", "interval": 25}}},
+    ], "size": 5, "after": {"lang": "go"}}}
+    with pytest.raises(ValueError, match=r"\['len'\]"):
+        bucket_agg_adhoc(df, spec)
+    spec["composite"]["after"]["len"] = 25.0
+    assert [(r.lang, r.len) for r in bucket_agg_adhoc(df, spec).collect()] == [("py", 0.0)]
